@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Pluggable index stores reproducing the reference's two Elasticsearch
   * sink semantics (SURVEY.md §2.8) against a local parquet store — the
@@ -99,6 +100,16 @@ final class UpsertParquetStore(root: String, keyCol: String, orderCols: Seq[Stri
   * amplification stays bounded — the same base/delta/compaction shape
   * Delta Lake and Iceberg MERGE pipelines use, minus the format
   * machinery this zero-egress build can't carry.
+  *
+  * Read path: every segment records its schema at write time (in its
+  * `_KEYSTATS` sidecar), so a read is ONE multi-path parquet scan per
+  * distinct segment schema — typically two, data and tombstone — with
+  * that schema supplied up front: no per-segment schema-inference job,
+  * no N-deep union, and build cost flat as the store ages. Each row's
+  * segment ordinal comes from its file's directory name. A segment with
+  * no recorded schema (written before schemas were recorded, or whose
+  * sidecar was lost) falls back to its own inferred scan, so old stores
+  * stay readable.
   *
   * Commit protocol: segments land in their own directories first, then
   * MANIFEST (the single source of truth, listing active segments in
@@ -403,17 +414,21 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
   }
 
-  // ---- data skipping: per-segment key-range stats ----
+  // ---- per-segment metadata: key-range stats and schema ----
 
   /** Key-range stats of one immutable segment — the per-file metadata
     * Iceberg keeps in its manifest files and Delta in its commit log.
-    * Stored as a `_KEYSTATS` sidecar INSIDE the segment directory
-    * (underscore-prefixed, so parquet readers ignore it; immutable
-    * because segments are; GC'd with the segment), which keeps the
-    * manifest commit protocol untouched — a production table format
-    * would inline these in the manifest to make pruning one metadata
-    * read instead of O(segments) tiny ones, but compaction bounds the
-    * segment count here and the PRUNING contract is identical.
+    * Stored, with the segment's schema, as a `_KEYSTATS` sidecar INSIDE
+    * the segment directory (underscore-prefixed, so parquet readers
+    * ignore it; immutable because segments are; GC'd with the segment),
+    * which keeps the manifest commit protocol untouched. The sidecar is
+    * one tab-separated line `typ lo hi schemaJson` (stats fields empty
+    * when the key type gets none); a legacy sidecar has only the three
+    * stats fields. Every read and lookup opens one sidecar per segment
+    * it considers — tiny local reads, and the price of not inlining
+    * the metadata in the manifest as a production table format would.
+    * Nothing compacts automatically, so that count grows with the
+    * store until [[compact]] or [[compactDeltas]] runs.
     * `mayContain` is conservative: an unknown type tag, a type
     * mismatch, or a missing sidecar (legacy segment) never prunes.
     */
@@ -458,8 +473,9 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     * computes the stats as it streams rows out, so no second job
     * re-reads what was just written (per-micro-batch upserts keep one
     * job per batch, the stats effectively free). Integral and
-    * (tab/control-free) string keys get stats; any other type writes
-    * no sidecar and the segment is simply never pruned.
+    * (tab/control-free) string keys get stats; any other type, or an
+    * empty segment, leaves the stats fields empty and the segment is
+    * simply never pruned. The schema is recorded either way.
     */
   private def writeSegmentWithStats(df: DataFrame, seg: String): Unit = {
     val path = s"$root/$seg"
@@ -471,8 +487,10 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       case Some(org.apache.spark.sql.types.StringType) => Some('S')
       case _ => None
     }
-    tag match {
-      case None => df.write.mode(SaveMode.Overwrite).parquet(path)
+    val stats = tag match {
+      case None =>
+        df.write.mode(SaveMode.Overwrite).parquet(path)
+        "\t\t"
       case Some(t) =>
         val obs = org.apache.spark.sql.Observation()
         df.observe(obs, min(col(keyCol)).cast("string").as("lo"),
@@ -482,21 +500,44 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
         (m.get("lo"), m.get("hi")) match {
           case (Some(lo: String), Some(hi: String))
               if t == 'L' || (lo + hi).forall(_ >= ' ') => // no tab/control chars in the sidecar
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$path/_KEYSTATS"), s"$t\t$lo\t$hi")
-          case _ => () // empty segment (null min/max): no sidecar
+            s"$t\t$lo\t$hi"
+          case _ => "\t\t" // empty segment (null min/max): no stats
         }
+    }
+    // schema JSON escapes tabs and newlines, so it is safe as the last field
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$path/_KEYSTATS"),
+      s"$stats\t${nullable(df.schema).json}")
+  }
+
+  /** `dt` with every level nullable — the schema a parquet read reports
+    * for what was written, so segments whose frames differed only in
+    * nullability share one scan.
+    */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
+  /** A segment's sidecar: its key-range stats (if any) and its recorded
+    * schema JSON (None for a legacy sidecar or a missing one).
+    */
+  private def readSidecar(seg: String): (Option[KeyStats], Option[String]) = {
+    val p = java.nio.file.Paths.get(s"$root/$seg/_KEYSTATS")
+    if (!java.nio.file.Files.exists(p)) (None, None)
+    else {
+      val f = java.nio.file.Files.readString(p).split("\t", -1)
+      val stats = f match {
+        case Array(t, lo, hi, _*) if t.length == 1 => Some(KeyStats(t.head, lo, hi))
+        case _ => None
+      }
+      (stats, f.lift(3))
     }
   }
 
-  private def readKeyStats(seg: String): Option[KeyStats] = {
-    val p = java.nio.file.Paths.get(s"$root/$seg/_KEYSTATS")
-    if (!java.nio.file.Files.exists(p)) None
-    else java.nio.file.Files.readString(p).split('\t') match {
-      case Array(t, lo, hi) if t.length == 1 => Some(KeyStats(t.head, lo, hi))
-      case _ => None
-    }
-  }
+  private def readKeyStats(seg: String): Option[KeyStats] = readSidecar(seg)._1
 
   /** The current segments that may hold any of `keys` — the data-
     * skipping decision, exposed for pruning assertions. A segment is
@@ -646,9 +687,7 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       post0.withColumn("op", lit("")).limit(0)
         .select(col(keyCol) +: col("op") +: dataCols.map(col): _*)
     else {
-        val candidates = newSegs
-          .map(seg => spark.read.parquet(s"$root/$seg").select(col(keyCol)))
-          .reduce(_ union _).distinct()
+        val candidates = segmentRows(spark, newSegs).select(col(keyCol)).distinct()
         val pre = pre0.join(candidates, Seq(keyCol), "left_semi")
           .select(col(keyCol).as("__pkey"),
             struct(orderCols.map(col): _*).as("__pord"))
@@ -672,20 +711,47 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
   private def mergedView(spark: SparkSession, segs: Seq[String]): DataFrame = {
     if (segs.isEmpty) spark.emptyDataFrame
     else {
-      val tagged = segs.zipWithIndex.map { case (seg, i) =>
-        spark.read.parquet(s"$root/$seg").withColumn("__seg", lit(i.toLong))
-      }
-      // allowMissingColumns: tombstone segments carry only key +
-      // orderCols + __tomb; data segments lack __tomb — both sides
-      // null-fill. A key whose orderCols winner is a tombstone is
-      // filtered from the view (and thus from the next compaction's
-      // base — that is the physical erasure).
-      val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
-      val merged = latestPerKey(union, segOrdered = true)
+      // A key whose orderCols winner is a tombstone is filtered from the
+      // view (and thus from the next compaction's base — that is the
+      // physical erasure).
+      val merged = latestPerKey(segmentRows(spark, segs), segOrdered = true)
       if (merged.columns.contains("__tomb"))
         merged.filter(!coalesce(col("__tomb"), lit(false))).drop("__tomb")
       else merged
     }
+  }
+
+  /** Every row of the non-empty `segs`, tagged with its position in
+    * `segs` as `__seg` (the newest-segment tie-break). Segments sharing
+    * a recorded schema are read by ONE multi-path scan with that schema
+    * given up front, so no schema inference runs; each row's `__seg` is
+    * its file's directory name looked up in a literal ordinal map. A
+    * segment with no recorded schema gets its own inferred scan. The
+    * scans are unioned in order of each schema's first segment, which
+    * keeps the column order a segment-by-segment union would give.
+    * allowMissingColumns: tombstone segments carry only key + orderCols
+    * + __tomb; data segments lack __tomb — both sides null-fill.
+    */
+  private def segmentRows(spark: SparkSession, segs: Seq[String]): DataFrame = {
+    val schemas = segs.map(readSidecar(_)._2)
+    // group by recorded schema; a segment without one is its own group
+    segs.indices.groupBy(i => schemas(i).toRight(i)).values.toSeq
+      .sortBy(_.head)
+      .map { idx =>
+        schemas(idx.head) match {
+          case None =>
+            spark.read.parquet(s"$root/${segs(idx.head)}")
+              .withColumn("__seg", lit(idx.head.toLong))
+          case Some(json) =>
+            val df = spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
+              .parquet(idx.map(i => s"$root/${segs(i)}"): _*)
+            val dirName = element_at(
+              split(df.metadataColumn("_metadata").getField("file_path"), "/"), -2)
+            df.withColumn("__seg",
+              element_at(typedLit(idx.map(i => segs(i) -> i.toLong).toMap), dirName))
+        }
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Fold all segments into one base segment; superseded segments are
@@ -810,15 +876,11 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     val current =
       if (old.size > 2) {
         val head = old.head
-        val tagged = old.tail.zipWithIndex.map { case (seg, i) =>
-          spark.read.parquet(s"$root/$seg").withColumn("__seg", lit(i.toLong))
-        }
-        val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
         val seg = nextSegment("m")
         // latestPerKey keeps a winning tombstone as a ROW (unlike the
         // read view, which filters it) — it must keep hiding the head
         // segment's version of the key
-        writeSegmentWithStats(latestPerKey(union, segOrdered = true)
+        writeSegmentWithStats(latestPerKey(segmentRows(spark, old.tail), segOrdered = true)
           .repartitionByRange(col(keyCol))
           .sortWithinPartitions(keyCol), seg)
         commit(Seq(head, seg), v)

@@ -583,6 +583,112 @@ class SinksSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq == Seq("x"))
   }
 
+  /** The merged view as the store built it before segment schemas were
+    * recorded: one inferred scan per segment, tagged with its position,
+    * folded into a union and merged by the same window — the reference
+    * the grouped scans must reproduce.
+    */
+  private def perSegmentView(root: String, segs: Seq[String]) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
+    val union = segs.zipWithIndex.map { case (seg, i) =>
+      spark.read.parquet(s"$root/$seg").withColumn("__seg", lit(i.toLong))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val w = Window.partitionBy("id").orderBy(col("ts").desc, col("__seg").desc)
+    val merged = union.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn", "__seg")
+    if (merged.columns.contains("__tomb"))
+      merged.filter(!coalesce(col("__tomb"), lit(false))).drop("__tomb")
+    else merged
+  }
+
+  private def versionSegs(root: String, v: Long): Seq[String] =
+    Files.readAllLines(Paths.get(s"$root/MANIFEST.v$v"))
+      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.collect().toSeq.sortBy(_.getLong(0)) ==
+      want.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
+  test("K3 delta store: grouped scans read exactly what per-segment scans read") {
+    // 22 segments: data, tombstones, one schema-evolved segment (extra
+    // `tag` column) and two legacy segments (sidecar deleted), so the
+    // view spans three recorded-schema scans plus two inferred ones.
+    val root = tmp("delta_scan_")
+    val store = new DeltaUpsertStore(root, "id", Seq("ts"))
+    def up(rows: (Long, Long, String)*): Unit =
+      store.upsert(rows.toDF("id", "ts", "v"), 0)
+    def del(rows: (Long, Long)*): Unit = store.delete(rows.toDF("id", "ts"), 0)
+    def makeLegacy(): Unit =
+      Files.delete(Paths.get(s"$root/${store.snapshotForTest()._1.last}/_KEYSTATS"))
+    up((0L until 40L).map(k => (k, 1L, s"base$k")): _*)
+    up((7L, 100L, "data7"), (8L, 5L, "x"), (9L, 100L, "data9"), (11L, 100L, "data11"))
+    // equal-orderCols contenders in different scan groups: the newer
+    // segment wins whichever scan it sits in
+    store.upsert(Seq((7L, 100L, "evolved7", "t7"), (8L, 100L, "evolved8", "t8"),
+      (20L, 3L, "e20", "t20")).toDF("id", "ts", "v", "tag"), 0) // 7 beats data7
+    del((9L, 100L)) // the tombstone ties data9 and wins: 9 is gone
+    for (r <- 4 until 20) {
+      if (r % 4 == 0) del((r.toLong, r.toLong), ((r * 3 % 40).toLong, 2L))
+      else up(((r * 7 % 40).toLong, r.toLong, s"r$r"), ((r + 21).toLong, r.toLong, s"q$r"))
+      if (r == 6) makeLegacy()
+    }
+    up((8L, 100L, "data8")) // beats the evolved segment's equal-ts row
+    up((11L, 100L, "legacy11")) // beats data11 from the legacy scan
+    makeLegacy()
+    val segs = store.snapshotForTest()._1
+    assert(segs.size == 22)
+
+    val ref = perSegmentView(root, segs)
+    sameRows(store.read(spark), ref)
+    val won = store.read(spark).filter($"id".isin(7L, 8L, 9L, 11L)).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(2))).toSeq
+    assert(won == Seq((7L, "evolved7"), (8L, "data8"), (11L, "legacy11")))
+    val keys = Seq(7L, 8L, 9L, 11L, 20L, 25L, 33L, 999L)
+    sameRows(store.lookup(spark, keys), ref.filter($"id".isin(keys: _*)))
+    for (v <- Seq(3L, 12L))
+      sameRows(store.readAt(spark, v), perSegmentView(root, versionSegs(root, v)))
+  }
+
+  test("K3 delta store: a 30-segment read runs no per-segment job and one scan per schema") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val store = new DeltaUpsertStore(tmp("delta_scan30_"), "id", Seq("ts"))
+    for (r <- 0 until 30) {
+      if (r % 6 == 5) store.delete(Seq((r.toLong - 1, r.toLong)).toDF("id", "ts"), r)
+      else store.upsert(Seq((r.toLong, r.toLong, s"v$r")).toDF("id", "ts", "v"), r)
+    }
+    assert(store.snapshotForTest()._1.size == 30)
+    val sc = spark.sparkContext
+    val group = s"delta-read-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val view = try {
+      sc.setJobGroup(group, "build the merged view")
+      try store.read(spark) finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // listing 30 paths stays on the driver; only a listing job over more
+    // paths than the parallel-discovery threshold may run, never one
+    // schema-inference job per segment
+    assert(jobs.get <= 1, s"building the read launched ${jobs.get} jobs")
+    assert(view.collect().length == 20) // 25 keys upserted, 5 of them deleted
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(view.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size <= 2, s"${scans.size} scans for 2 segment schemas (data, tombstone)")
+  }
+
   test("K3 delta store: compaction folds stats into the base segment") {
     val store = new DeltaUpsertStore(tmp("delta_lookup4_"), "id", Seq("ts"))
     store.upsert(Seq((1L, 1L, "a")).toDF("id", "ts", "v"), 0)
